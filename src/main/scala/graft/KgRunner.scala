@@ -34,21 +34,8 @@ object KgRunner {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/graft_kg"
     val nPages = if (args.length > 1) args(1).toLong else 200L
-    val par = if (args.length > 2) args(2).toInt else
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$par]"))
-      .appName("graft-kg")
-      .config("spark.sql.shuffle.partitions", par.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    implicit val s: SparkSession = spark
-    import spark.implicits._
+    val par = if (args.length > 2) args(2).toInt else Session.defaultParallelism
+    val spark = Session.build("graft-kg", par, sys.env.get("SPARK_MASTER"))
 
     val t0 = System.nanoTime()
     run(spark, outDir, nPages, par)

@@ -148,32 +148,20 @@ object Canon {
         .observe(obs, sum(col("label").cast("decimal(38,0)")).as("label_sum"))
         .localCheckpoint(eager = true)
       // the observed metric is posted on the ASYNC listener bus after the
-      // eager checkpoint's action completes — drain the bus before reading
-      // so a fresh session's first iteration doesn't race into the (more
-      // expensive) diff-join fallback
-      // None = metrics row not delivered yet; Some(ZERO) = delivered but
-      // the sum is NULL (EMPTY vertex set — sum over no rows). The two
-      // must stay distinct: conflating them sent every empty-input run
-      // into the fallback no matter how long the bus was drained.
-      def readSum(): Option[java.math.BigDecimal] = {
-        val m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
+      // eager checkpoint's action completes — wait for it so a fresh
+      // session's first iteration doesn't race into the (more expensive)
+      // diff-join fallback.
+      // None = metrics row not delivered; Some(ZERO) = delivered but the
+      // sum is NULL (EMPTY vertex set — sum over no rows). The two must
+      // stay distinct: conflating them sent every empty-input run into the
+      // fallback no matter how long the bus was drained.
+      val m = org.apache.spark.sql.GraftBridge.awaitObserved(spark, obs)
+      val sumOpt =
         if (m.isEmpty) None
         else Some(m.get("label_sum")
           .map(_.asInstanceOf[java.math.BigDecimal])
           .filter(_ ne null)
           .getOrElse(java.math.BigDecimal.ZERO))
-      }
-      var sumOpt = readSum()
-      if (sumOpt.isEmpty) {
-        // bounded drain-and-retry: the bus can re-queue behind a slow
-        // listener under load, so one drain is not always enough
-        val deadline = System.nanoTime() + 2000000000L
-        while (sumOpt.isEmpty && System.nanoTime() < deadline) {
-          org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-          sumOpt = readSum()
-          if (sumOpt.isEmpty) Thread.sleep(20)
-        }
-      }
       val sumNow = sumOpt.orNull
       val changed =
         if (sumNow != null && prevSum != null) sumNow.compareTo(prevSum) != 0

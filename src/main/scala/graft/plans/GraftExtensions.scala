@@ -11,7 +11,7 @@ import graft.functions.{BoundedEnds, CosineSim, RollingHash, TopKFreq}
   *
   *   spark.sql.extensions=graft.plans.GraftExtensions
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions()(_))`).
+  * (or `.withExtensions(new GraftExtensions()(_))` on the session builder).
   * Injects:
   *   - the native SQL functions `rolling_hash(text)` (codegen scalar,
   *     functions/RollingHash.scala), `cosine_sim(a, b)` (fused codegen

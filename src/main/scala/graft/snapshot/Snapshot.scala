@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * This emulates Iceberg snapshot commits (no iceberg jar ships in
   * /opt/spark/jars): the manifest plays the role of the snapshot metadata
-  * file, and "commit" is the atomic rename-free write of _manifest.json
+  * file, and "commit" is the write-temp-then-rename of _manifest.json
   * AFTER the parquet write succeeds — readers gate on the manifest, so a
   * half-written stage is invisible, which is the same correctness contract
   * as an Iceberg MERGE commit.
@@ -41,6 +41,22 @@ object Snapshot {
 
   def exists(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new HPath(manifestPath(dir)))
+
+  /** Commit a stage: write the manifest to `_manifest.json.tmp`, then
+    * rename it over `_manifest.json`, so a crash mid-write leaves no
+    * truncated manifest that [[exists]] would take as committed. The
+    * leading `_` keeps the temp file out of Spark's parquet listing.
+    */
+  private def commit(spark: SparkSession, dir: String, m: Manifest): Unit = {
+    val target = new HPath(manifestPath(dir))
+    val tmp = new HPath(s"${manifestPath(dir)}.tmp")
+    val f = fs(spark, dir)
+    val out = f.create(tmp, true)
+    try out.write(toJson(m).getBytes("UTF-8"))
+    finally out.close()
+    if (!f.rename(tmp, target))
+      throw new java.io.IOException(s"manifest commit failed: rename $tmp -> $target")
+  }
 
   /** Write df → dir (overwrite), then commit the manifest. `partitionBy`
     * columns become physical partitions (e.g. entity type + url-hash
@@ -104,9 +120,7 @@ object Snapshot {
       if (partCounts.isEmpty && partitionBy.isEmpty) Map("all" -> 0L)
       else partCounts
     val m = Manifest(stage, counts.values.sum, counts, parent)
-    val out = fs(spark, dir).create(new HPath(manifestPath(dir)), true)
-    try out.write(toJson(m).getBytes("UTF-8"))
-    finally out.close()
+    commit(spark, dir, m)
     m
   }
 
@@ -146,10 +160,7 @@ object Snapshot {
           rs.map { case r: org.apache.spark.sql.Row => r.getLong(1) }.sum
         case _ => spark.read.parquet(dir).count()
       }
-      val m = Manifest(name, rows, Map("all" -> rows), parent)
-      val out = fs(spark, dir).create(new HPath(manifestPath(dir)), true)
-      try out.write(toJson(m).getBytes("UTF-8"))
-      finally out.close()
+      commit(spark, dir, Manifest(name, rows, Map("all" -> rows), parent))
       System.err.println(
         f"[snapshot] bucketed stage $name committed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }

@@ -662,41 +662,34 @@ object Dedup {
     * ubiquitous shingles (df > 2) drop out before the pair stage, so no hot
     * keys reach the second shuffle.
     *
-    * r6 (`hashShingles=true`, the [[exactSubstrDedup]] hashGrams stance):
-    * the inverted index is keyed on [[shingles]]' streamed fnv1a64 hashes
-    * instead of the shingle strings — the exploded rows and both shuffles
-    * carry an 8-byte long where the string form carries the n-word window
-    * text, and the flatMap never materializes the window string at all
-    * (guide §2.3 "shuffle keys instead of payloads"). Identical edges as
-    * long as fnv1a64 is injective on the corpus's shingle set: a collision
-    * could only MERGE two df=1 shingles into a phantom df=2 edge (or knock
-    * a real df=2 shingle out via df=3), which flips a cluster label and
-    * turns the cluster oracles red — observable, with even odds needing
-    * ~2^32 distinct shingles (birthday bound), far above any per-corpus
-    * shingle count this engine caps buckets for. The string path is kept
-    * for direct SQL-recomputability.
+    * The inverted index is keyed on [[shingles]]' streamed fnv1a64 hashes,
+    * not the shingle strings: the exploded rows and both shuffles carry an
+    * 8-byte long instead of the n-word window text, and the flatMap never
+    * materializes the window string (guide §2.3 "shuffle keys instead of
+    * payloads"). The edges equal the string-keyed ones (CorpusOpsSpec keeps
+    * that reference) as long as fnv1a64 is injective on the corpus's
+    * shingle set. The 64-bit birthday bound puts even odds of one collision
+    * at ~2^32 distinct shingles. A collision can only MERGE two df=1
+    * shingles into a phantom df=2 shingle (or push a real df=2 shingle to
+    * df=3), which moves `n_shared` of one pair by one. With
+    * `minShared >= 2` a phantom shingle cannot create an edge on its own:
+    * the pair must also share a real rare shingle. A changed edge flips a
+    * cluster label, which the cluster oracles would show.
     */
   def sharedRareShingleEdges(
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      minShared: Int = 2,
-      hashShingles: Boolean = true
+      minShared: Int = 2
   ): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val base = docs.select(col(idCol).as("id"), col(textCol).as("text"))
+    docs.select(col(idCol).as("id"), col(textCol).as("text"))
       .as[(Long, String)]
-    val expl =
-      if (hashShingles)
-        base.flatMap { case (id, txt) =>
-          shingles(txt).distinct.map(g => (id, g))
-        }.toDF("id", "g")
-      else
-        base.flatMap { case (id, txt) =>
-          shingleStrings(txt).distinct.map(g => (id, g))
-        }.toDF("id", "g")
-    expl.groupBy($"g")
+      .flatMap { case (id, txt) =>
+        shingles(txt).distinct.map(g => (id, g))
+      }.toDF("id", "g")
+      .groupBy($"g")
       .agg(min($"id").as("src"), max($"id").as("dst"),
         count(lit(1)).as("df"))
       .filter($"df" === 2 && $"src" =!= $"dst")
@@ -864,15 +857,15 @@ object Dedup {
     * could not partial-aggregate); unique grams (the overwhelming majority
     * at any scale) die in the partial agg. Coverage and reconstruction are
     * keyed by (doc_id, idx) — partitioned by doc, per-doc memory bounded
-    * by the document's own word count. With `hashGrams` (the default) the
-    * duplicate-gram table is keyed by `xxhash64(gram)` instead of the k-word
-    * string — 8 bytes/row through the corpus-wide shuffle instead of the
-    * gram text (measured ~8× fewer gram-stage shuffle bytes at sf0.1, see
-    * BASELINE.md). A 64-bit collision (~n²/2⁶⁵) could only MERGE two
-    * distinct grams' occurrence groups — deterministic, and it would
-    * surface as a removal diff against the string-keyed DuckDB oracle,
-    * which stays byte-exact on the gram TEXT; `hashGrams = false` retains
-    * the exact-string path.
+    * by the document's own word count. The duplicate-gram table is keyed by
+    * `xxhash64(gram)`, not the k-word string — 8 bytes/row through the
+    * corpus-wide shuffle instead of the gram text (measured ~8× fewer
+    * gram-stage shuffle bytes at sf0.1, see BASELINE.md). By the 64-bit
+    * birthday bound a collision is expected with probability ~n²/2⁶⁵ for n
+    * distinct grams. A collision could only MERGE two distinct grams'
+    * occurrence groups — deterministic, and it would surface as a removal
+    * diff against the string-keyed DuckDB oracle, which stays byte-exact on
+    * the gram TEXT.
     *
     * The (doc_id, words) projection feeds three consumers (shingles,
     * positions, final counts); at 100 TB cache/checkpoint that projection
@@ -885,14 +878,13 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      k: Int = 8,
-      hashGrams: Boolean = true
+      k: Int = 8
   ): DataFrame = {
     val base = docs.select(
       col(idCol).cast("long").as("doc_id"),
       filter(split(coalesce(col(textCol), lit("")), " +", -1),
         w => length(w) > 0).as("w"))
-    val shStr = base.select(col("doc_id"),
+    val sh = base.select(col("doc_id"),
       explode(when(size(col("w")) >= k,
         transform(sequence(lit(1), size(col("w")) - (k - 1)),
           i => struct(i.as("start"),
@@ -900,12 +892,7 @@ object Dedup {
         .otherwise(array().cast("array<struct<start:int,gram:string>>")))
         .as("s"))
       .select(col("doc_id"), col("s.start").as("start"),
-        col("s.gram").as("gram"))
-    val sh =
-      if (hashGrams)
-        shStr.select(col("doc_id"), col("start"),
-          xxhash64(col("gram")).as("gram"))
-      else shStr
+        xxhash64(col("s.gram")).as("gram"))
     val firsts = sh.groupBy("gram").agg(
       count(lit(1)).as("c"),
       min(struct(col("doc_id"), col("start"))).as("first"))

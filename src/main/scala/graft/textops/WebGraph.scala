@@ -394,29 +394,15 @@ object WebGraph {
         val obs = org.apache.spark.sql.Observation()
         val ck = df.observe(obs, max(col("raw")).as("mx"))
           .localCheckpoint(true)
-        def read(): Option[Long] = {
-          val m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
-          if (m.isEmpty) None
-          else Some(m.get("mx").map {
-            case null => 0L
-            case v => v.asInstanceOf[Long]
-          }.getOrElse(0L))
-        }
-        var mx = read()
-        if (mx.isEmpty) {
-          val deadline = System.nanoTime() + 2000000000L
-          while (mx.isEmpty && System.nanoTime() < deadline) {
-            org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-            mx = read()
-            if (mx.isEmpty) Thread.sleep(20)
-          }
-        }
+        val om = org.apache.spark.sql.GraftBridge.awaitObserved(spark, obs)
         // fallback: one cheap agg over the checkpointed table (metric lost
         // to a slow listener bus — same stance as Canon's diff-join)
-        val m = mx.getOrElse {
-          val row = ck.agg(max(col("raw"))).first()
-          if (row.isNullAt(0)) 0L else row.getLong(0)
-        }
+        val m =
+          if (om.nonEmpty) om.get("mx").collect { case v: Long => v }.getOrElse(0L)
+          else {
+            val row = ck.agg(max(col("raw"))).first()
+            if (row.isNullAt(0)) 0L else row.getLong(0)
+          }
         (ck, m)
       }
       for (_ <- 1 to iterations) {

@@ -85,10 +85,7 @@ object FreezeGoldens {
       .sorted
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build("graft-goldens", 4)
     Files.createDirectories(Paths.get(GoldenDir))
     Files.write(Paths.get(s"$GoldenDir/triples.golden.txt"),
       tripleLines(spark).mkString("\n").getBytes("UTF-8"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality audit: prints the formatted physical plan of key queries and
   * greps for the properties that matter at 100 TB — PushedFilters reaching
   * the parquet scan, pruned ReadSchema, BroadcastHashJoin for dim joins,
@@ -10,13 +8,9 @@ import org.apache.spark.sql.SparkSession
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // pinned at 4 like the test suites, so the audited plans do not depend
+    // on the host's core count
+    val spark = graft.Session.build("graft-plancheck", 4)
 
     val interesting = Seq("q1_agg", "j1_join_lineage", "j2_broadcast_dim",
       "p13_filter_guards", "a3_argmax_dedup", "u2_except",

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `.explain("formatted")` for named SparkEntry queries to
@@ -17,16 +16,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build("graft-plandump")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

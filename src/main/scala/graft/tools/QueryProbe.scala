@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query timing + shuffle-byte meter:
   * `runMain graft.tools.QueryProbe <sfDir> <q1> [q2 ...]`.
   * Each query: one cold run (≈ what the Bench suite measures), one warm
@@ -13,15 +11,7 @@ object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build("graft-queryprobe")
     val meter = new ShuffleMeter(spark)
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

@@ -18,10 +18,28 @@ object GraftBridge {
     */
   def observedOrEmpty(obs: Observation): Map[String, Any] = obs.getOrEmpty
 
+  /** Observed metrics of an action that has already run, waiting at most
+    * ~2 s for them: the metrics row is posted on the async listener bus
+    * after the action completes, and under load the bus can re-queue
+    * behind a slow listener, so one drain is not always enough. Empty map
+    * when the row was not delivered in time; the caller decides the
+    * fallback.
+    */
+  def awaitObserved(spark: SparkSession, obs: Observation): Map[String, Any] = {
+    var m = obs.getOrEmpty
+    val deadline = System.nanoTime() + 2000000000L
+    while (m.isEmpty && System.nanoTime() < deadline) {
+      drainListenerBus(spark)
+      m = obs.getOrEmpty
+      if (m.isEmpty) Thread.sleep(20)
+    }
+    m
+  }
+
   /** Block until the async SparkListenerBus has delivered every queued
-    * event (`listenerBus` is private[spark]; bridged so the measurement
-    * tools can read listener-fed counters deterministically instead of
-    * sleeping and hoping the bus drained).
+    * event (`listenerBus` is private[spark]). Used by [[awaitObserved]]
+    * and by `tools.ShuffleMeter`, so listener-fed values are read after
+    * the bus drained instead of after a guessed sleep.
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(30000L)

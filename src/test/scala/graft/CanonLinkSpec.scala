@@ -147,6 +147,40 @@ class SnapshotSpec extends AnyFunSuite {
     }
     assert(computes == 1 && df2.count() == 3)
   }
+
+  test("manifest commit leaves no temp file") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("snapc").toString
+    Snapshot.stage(spark, s"$root/plain", "plain") { Seq(1, 2).toDF("v") }
+    Snapshot.stageBucketed(spark, s"$root/bucketed", "snapc_bucketed",
+      "bucketed", "v", buckets = 2) { Seq(1, 2).toDF("v") }
+    spark.sql("DROP TABLE IF EXISTS snapc_bucketed")
+    Seq("plain", "bucketed").foreach { d =>
+      assert(Snapshot.exists(spark, s"$root/$d"))
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"${Snapshot.manifestPath(s"$root/$d")}.tmp")))
+    }
+  }
+
+  test("a directory holding parquet and only a temp manifest is recomputed") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("snapt").toString + "/t"
+    Seq(("stale", 1)).toDF("k", "v").write.parquet(dir)
+    // what a crash during the manifest write leaves behind
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"${Snapshot.manifestPath(dir)}.tmp"),
+      """{"stage":"test","ro""")
+    var computes = 0
+    val df = Snapshot.stage(spark, dir, "test") {
+      computes += 1
+      Seq(("fresh", 2)).toDF("k", "v")
+    }
+    assert(computes == 1)
+    assert(df.collect().map(_.getString(0)).toSeq == Seq("fresh"))
+    assert(Snapshot.exists(spark, dir))
+  }
 }
 
 class KgRunnerSpec extends AnyFunSuite {

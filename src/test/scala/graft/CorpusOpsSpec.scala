@@ -60,26 +60,46 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("sharedRareShingleEdges: hashed-key path == string-key path on a real corpus") {
-    // r6: the inverted index shuffles fnv1a64 shingle hashes instead of the
+    // The inverted index shuffles fnv1a64 shingle hashes instead of the
     // window strings. Injectivity of the hash on the observed shingle set
     // makes the edge sets identical — pin it on real sf0.001 documents plus
-    // the sub-n/empty/multi-space edge shapes.
+    // the sub-n/empty/multi-space edge shapes, against a string-keyed
+    // reference built here with the same df=2 index shape.
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
+    // a planted pair sharing exactly two 3-word shingles made of words no
+    // real document contains: both shingles have df=2, so the pair is an
+    // edge by construction
+    assert(real.filter(col("text").contains("zqplant")).isEmpty,
+      "planted words must be absent from sf0.001")
+    val plantedWords = Seq("zqplanta", "zqplantb", "zqplantc", "zqplantd")
+    val planted = (9000006L, 9000007L)
     val weird = Seq(
       (9000001L, ""), (9000002L, "one two"), (9000003L, "one  two"),
-      (9000004L, "   "), (9000005L, "a b c a b c a b c")
+      (9000004L, "   "), (9000005L, "a b c a b c a b c"),
+      (planted._1, (plantedWords :+ "zqplante").mkString(" ")),
+      (planted._2, ("zqplantf" +: plantedWords).mkString(" "))
     ).toDF("doc_id", "text")
     val docs = real.unionByName(weird)
-    val hashed = Dedup.sharedRareShingleEdges(docs, "doc_id", "text", 2,
-      hashShingles = true)
+    val hashed = Dedup.sharedRareShingleEdges(docs, "doc_id", "text", 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val strings = Dedup.sharedRareShingleEdges(docs, "doc_id", "text", 2,
-      hashShingles = false)
+    val strings = docs.as[(Long, String)]
+      .flatMap { case (id, txt) =>
+        Dedup.shingleStrings(txt).distinct.map(g => (id, g))
+      }.toDF("id", "g")
+      .groupBy($"g")
+      .agg(min($"id").as("src"), max($"id").as("dst"),
+        count(lit(1)).as("df"))
+      .filter($"df" === 2 && $"src" =!= $"dst")
+      .groupBy($"src", $"dst")
+      .agg(count(lit(1)).as("n_shared"))
+      .filter($"n_shared" >= 2)
+      .select($"src", $"dst")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(hashed == strings,
       s"edge mismatch: only-hashed=${hashed.diff(strings)} only-string=${strings.diff(hashed)}")
     assert(hashed.nonEmpty, "fixture must produce at least one edge")
+    assert(hashed.contains(planted), s"planted edge $planted missing")
   }
 
   test("md5Bucket: deterministic, in [0,100), engine-stable value") {

@@ -6,15 +6,5 @@ import org.apache.spark.sql.SparkSession
   * all tests).
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.build("graft-test", 4)
 }
