@@ -58,9 +58,14 @@ object KgRunner {
     val b = Pipeline.broadcasts(spark) // built + shipped once for all stages
     System.err.println(
       f"[kg] broadcasts built in ${(System.nanoTime() - tb0) / 1e9}%.1f s")
-    def arts = Pipeline.artifacts(Corpus.pages(spark, nPages, par * 4), b)
+    def pages = Corpus.pages(spark, nPages, par * 4)
+    def arts = Pipeline.artifacts(pages, b)
+    // source_segment and corpus_info read only sentence fields, which
+    // annotate copies unchanged: they start from the extracted sentences
+    // and skip annotate.
+    def sents = Pipeline.sentences(pages)
 
-    // Every stage that depends ONLY on arts starts IMMEDIATELY as a
+    // Every stage that depends ONLY on the pages starts IMMEDIATELY as a
     // concurrent Spark job (separate driver threads; the scheduler
     // interleaves their stages across the same executors). Round 1 queued
     // the final-table branches behind canon — their serialized latency was
@@ -97,11 +102,11 @@ object KgRunner {
       // reference §1.3 final table surface (format parity)
       Future {
         Snapshot.stage(spark, s"$outDir/source_segment", "source_segment") {
-          graft.canon.FinalTables.sourceSegment(arts)
+          graft.canon.FinalTables.sourceSegment(sents)
         }
         val ci = Snapshot.stage(spark, s"$outDir/corpus_info",
           "corpus_info") {
-          graft.canon.FinalTables.corpusInfo(arts)
+          graft.canon.FinalTables.corpusInfo(sents)
         }
         Snapshot.stage(spark, s"$outDir/source_labeled", "source_labeled") {
           graft.canon.FinalTables.sourceLabeled(trainingInfoDf, ci)

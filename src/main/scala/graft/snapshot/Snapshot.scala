@@ -1,7 +1,9 @@
 package graft.snapshot
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Snapshot-per-stage checkpointing with per-partition lineage + counter
@@ -32,12 +34,51 @@ object Snapshot {
 
   def manifestPath(dir: String): String = s"$dir/_manifest.json"
 
+  /** Hadoop conf entries that make `file:` paths resolve to
+    * [[NioLocalFileSystem]], which sets permissions in-process. Spark's
+    * distribution ships no libhadoop, so the stock local filesystem forks a
+    * `chmod` process for every directory, parquet file and `.crc` file it
+    * creates: about 1,900 processes per 200-page KgRunner build, run one
+    * after another inside the writing task. The entries ride on each
+    * snapshot write's own options and on the conf copy [[fs]] builds; the
+    * session's Hadoop conf is left as it is. Other schemes never read
+    * `fs.file.*`. The cache switch is needed because the FileSystem cache,
+    * keyed by scheme, would hand back the session's cached instance.
+    */
+  private[graft] val localFsConf: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** All manifest IO goes through the Hadoop FileSystem of the target path,
     * so snapshots gate correctly on hdfs:// and s3a:// outDirs as well as
     * local paths (the spark-submit cluster case, not just the sandbox).
     */
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[graft] def fs(spark: SparkSession, path: String): FileSystem = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    localFsConf.foreach { case (k, v) => conf.set(k, v) }
+    new HPath(path).getFileSystem(conf)
+  }
+
+  /** Manifest key of a row: its partition values joined by `/`, with a null
+    * (or, for strings, empty) value written as the directory name Spark
+    * gives it, `__HIVE_DEFAULT_PARTITION__`. Both the observed count and the
+    * re-read fallback key rows with this one expression, so they agree.
+    */
+  private def partitionKey(partitionBy: Seq[String]): Column =
+    if (partitionBy.isEmpty) lit("all")
+    else concat_ws("/", partitionBy.map { c =>
+      val v = col(c).cast("string")
+      when(v.isNull || v === "", lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
+        .otherwise(v)
+    }: _*)
+
+  /** Per-partition row counts re-read from a written snapshot: the fallback
+    * when the observed metric is unavailable.
+    */
+  private[graft] def recount(spark: SparkSession, dir: String,
+      partitionBy: Seq[String]): Map[String, Long] =
+    spark.read.parquet(dir).groupBy(partitionKey(partitionBy)).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   def exists(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new HPath(manifestPath(dir)))
@@ -70,6 +111,18 @@ object Snapshot {
     * whole stage output per snapshot, the largest slice of the ~30 s fixed
     * end-to-end floor. A defensive fallback re-reads only if the observed
     * metric is unavailable.
+    *
+    * A partitioned write first hashes rows onto their partition columns, so
+    * each directory gets exactly one file (without it every task writes a
+    * file into every directory it sees rows for). The shuffle is given an
+    * explicit partition count, `spark.sql.shuffle.partitions`: AQE coalesces
+    * a small `repartition(cols)` shuffle into ONE partition, and that single
+    * task then writes every directory one after another (6 s for the 320
+    * edge files of a 200-page build). AQE never coalesces an explicit
+    * count, so each core runs a writer task.
+    *
+    * Files and directories are created through [[localFsConf]] (no `chmod`
+    * process per file on `file:` paths).
     */
   def write(
       df: DataFrame,
@@ -78,44 +131,28 @@ object Snapshot {
       partitionBy: Seq[String] = Nil,
       parent: String = ""
   ): Manifest = {
-    // shuffle rows onto their target partition before a partitioned write:
-    // otherwise every task writes a file into every partition dir
-    // (tasks × partitions small files — the classic partitioned-write
-    // explosion). One shuffle buys one file per partition per write.
+    val spark = df.sparkSession
     val arranged =
-      if (partitionBy.nonEmpty) df.repartition(partitionBy.map(col): _*)
-      else df
-    val keyCol =
       if (partitionBy.nonEmpty)
-        concat_ws("/", partitionBy.map(c => col(c).cast("string")): _*)
-      else lit("all")
+        df.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+          partitionBy.map(col): _*)
+      else df
     val obs = org.apache.spark.sql.Observation()
     val observed = arranged.observe(obs,
       graft.functions.TopKFreq
-        .top_k_freq(keyCol, Int.MaxValue, Int.MaxValue).as("part_counts"))
-    val writer = observed.write.mode(SaveMode.Overwrite)
+        .top_k_freq(partitionKey(partitionBy), Int.MaxValue, Int.MaxValue)
+        .as("part_counts"))
+    val writer = observed.write.mode(SaveMode.Overwrite).options(localFsConf)
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(dir)
-    val spark = df.sparkSession
-    val partCounts: Map[String, Long] = {
-      val viaObs = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs).get("part_counts").map {
-        case rows: scala.collection.Seq[_] =>
+    val partCounts: Map[String, Long] =
+      org.apache.spark.sql.GraftBridge.observedOrEmpty(obs).get("part_counts")
+        .map { case rows: scala.collection.Seq[_] =>
           rows.map { case r: org.apache.spark.sql.Row =>
             r.getString(0) -> r.getLong(1)
           }.toMap
-      }
-      viaObs.getOrElse {
-        // fallback: post-write re-read (pre-observe behavior)
-        val written = spark.read.parquet(dir)
-        if (partitionBy.nonEmpty)
-          written.groupBy(partitionBy.map(col): _*).count()
-            .collect()
-            .map(r => partitionBy.indices.map(i => String.valueOf(r.get(i)))
-              .mkString("/") -> r.getLong(partitionBy.length))
-            .toMap
-        else Map("all" -> written.count())
-      }
-    }
+        }
+        .getOrElse(recount(spark, dir, partitionBy))
     val counts =
       if (partCounts.isEmpty && partitionBy.isEmpty) Map("all" -> 0L)
       else partCounts
@@ -150,6 +187,7 @@ object Snapshot {
           .as("part_counts"))
       spark.sql(s"DROP TABLE IF EXISTS $table")
       observed.write.mode(SaveMode.Overwrite)
+        .options(localFsConf)
         .option("path", dir)
         .bucketBy(buckets, bucketCol)
         .sortBy(bucketCol)

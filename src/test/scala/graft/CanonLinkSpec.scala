@@ -181,6 +181,96 @@ class SnapshotSpec extends AnyFunSuite {
     assert(df.collect().map(_.getString(0)).toSeq == Seq("fresh"))
     assert(Snapshot.exists(spark, dir))
   }
+
+  import java.nio.file.{Files, Path, Paths}
+  import scala.jdk.CollectionConverters._
+
+  /** Every path under `root`, root included. */
+  private def walk(root: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(root))
+    try s.iterator.asScala.toList finally s.close()
+  }
+
+  test("partitioned snapshot: several writer tasks, one parquet file per directory") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("snapw").toString + "/t"
+    // 32 partition keys over the session's 4 shuffle partitions
+    Snapshot.stage(spark, dir, "writers", partitionBy = Seq("k")) {
+      (0 until 96).map(i => (i % 32, i)).toDF("k", "v")
+    }
+    val partDirs = walk(dir).filter(_.getFileName.toString.startsWith("k="))
+    assert(partDirs.size == 32)
+    val files = partDirs.map(d => walk(d.toString).map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")))
+    assert(files.forall(_.size == 1), files)
+    val writers = files.flatten.map(_.split('-')(1)).distinct
+    assert(writers.size > 1, s"one writer task wrote every directory: $writers")
+  }
+
+  test("snapshot IO sets the modes a plain write does, in-process, with .crc files") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import java.nio.file.attribute.PosixFilePermissions
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("snapm").toString
+    val df = Seq(("a", 1), ("b", 2), ("b", 3)).toDF("k", "v")
+    Snapshot.write(df, s"$root/snap", "modes", Seq("k"))
+    df.write.partitionBy("k").parquet(s"$root/plain")
+    def mode(p: Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    // (path with task index and write uuid blanked, mode); the manifest has
+    // no counterpart in a plain write
+    def modes(base: String): Set[(String, String)] =
+      walk(base).filterNot(_.getFileName.toString.contains("_manifest"))
+        .map(p => Paths.get(base).relativize(p).toString
+          .replaceAll("part-\\d+-[0-9a-f-]+", "part") -> mode(p)).toSet
+    assert(modes(s"$root/snap") == modes(s"$root/plain"))
+    // every parquet file keeps its checksum
+    walk(s"$root/snap").filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach { p =>
+        assert(Files.exists(p.resolveSibling(s".${p.getFileName}.crc")), p)
+      }
+    // snapshot IO resolves to the in-process filesystem; the session's own
+    // Hadoop conf is left alone
+    val fs = Snapshot.fs(spark, s"$root/snap")
+    assert(fs.getClass == classOf[graft.snapshot.NioLocalFileSystem])
+    assert(!new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .isInstanceOf[graft.snapshot.NioLocalFileSystem])
+    // the POSIX mapping, beyond the 0644/0755 defaults
+    val f = new HPath(s"$root/snap/_manifest.json")
+    Seq("640" -> "rw-r-----", "600" -> "rw-------", "751" -> "rwxr-x--x",
+      "777" -> "rwxrwxrwx", "644" -> "rw-r--r--").foreach { case (octal, want) =>
+      fs.setPermission(f, new FsPermission(Integer.parseInt(octal, 8).toShort))
+      assert(mode(Paths.get(f.toUri.getPath)) == want, octal)
+    }
+  }
+
+  test("null partition values: manifest keys and counts equal a re-read of the parquet") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("snapn").toString + "/t"
+    val df = Seq[(String, java.lang.Integer, Int)](("a", 1, 1), ("a", null, 2),
+      (null, 1, 3), (null, null, 4), (null, null, 5), ("", 2, 6))
+      .toDF("t", "b", "v")
+    val m = Snapshot.write(df, dir, "nulls", Seq("t", "b"))
+    // rows per leaf directory, each read on its own; the key is the pair of
+    // directory values Spark chose (null and "" become the default name)
+    val perDir = walk(dir).filter(_.getFileName.toString.startsWith("b="))
+      .map { leaf =>
+        val key = Seq(leaf.getParent, leaf)
+          .map(_.getFileName.toString.split("=", 2)(1)).mkString("/")
+        key -> spark.read.parquet(leaf.toString).count()
+      }.toMap
+    val d = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .DEFAULT_PARTITION_NAME
+    assert(perDir == Map("a/1" -> 1L, s"a/$d" -> 1L, s"$d/1" -> 1L,
+      s"$d/$d" -> 2L, s"$d/2" -> 1L))
+    assert(m.partitions == perDir)
+    assert(m.rows == spark.read.parquet(dir).count())
+    // the re-read fallback keys rows the same way
+    assert(Snapshot.recount(spark, dir, Seq("t", "b")) == m.partitions)
+  }
 }
 
 class KgRunnerSpec extends AnyFunSuite {
