@@ -165,7 +165,7 @@ object KgRunner {
       Future {
         Snapshot.stage(spark, s"$outDir/nodes", "nodes",
           partitionBy = Seq("entType", "bucket"), parent = "canon") {
-          Materialize.nodes(triples.as[graft.model.Triple], canonMap)
+          Materialize.nodes(canonMap)
         }
       },
       Future {

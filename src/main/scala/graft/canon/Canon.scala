@@ -1,6 +1,6 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -176,13 +176,27 @@ object Canon {
         }
       prevSum = sumNow
       labels.unpersist(blocking = false)
+      // The checkpoint already holds these labels; the cached copy is for
+      // the planner: the checkpoint's LogicalRDD keeps constraints on
+      // attributes outside its output, and the next round's union fails on
+      // them ("key not found: v#…") once its no-op projection is removed.
       labels = jumped.persist(StorageLevel.MEMORY_AND_DISK)
       converged = !changed
       iter += 1
     }
+    // release every frame persisted here: callers join the result once,
+    // reading the last round's checkpoint (or the edges, if no round ran)
+    labels.unpersist(blocking = false)
     e.unpersist(blocking = false)
     labels.select($"v", $"label".as("component"))
   }
+
+  /** Vertex id of a typed surface: the 63-bit content hash of
+    * `surface|entType`, stable across runs, partitionings and cluster sizes.
+    * Alias edges, the canon map and the edge table's fallback all use it.
+    */
+  def vertexId(surface: Column, entType: Column): Column =
+    xxhash64(concat_ws("|", surface, entType)).bitwiseAND(lit(Long.MaxValue))
 
   /** Canonicalize typed surfaces: vertices = (surface, entType) hashed;
     * returns (surface, entType, canonId).
@@ -195,8 +209,7 @@ object Canon {
     val spark = nodes.sparkSession
     import spark.implicits._
     val withId = nodes
-      .withColumn("v", xxhash64(concat_ws("|", $"surface", $"entType"))
-        .bitwiseAND(lit(Long.MaxValue)))
+      .withColumn("v", vertexId($"surface", $"entType"))
     // live skew guard: hot alias hubs (ubiquitous surfaces) pre-contracted
     // before iteration; connectivity- and label-preserving (see spec)
     val cc = connectedComponents(preContractHot(aliasEdges, skewThreshold))

@@ -3,6 +3,7 @@ package graft.link
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.canon.Canon
 import graft.dict.Trie
 import graft.pipeline.Annotate.SentenceArtifacts
 
@@ -140,9 +141,8 @@ object Link {
     if (union == 0) 0.0 else inter / union
   }
 
-  /** Full linking pass over pipeline artifacts: distinct mention surfaces →
-    * candidates → blended score; accepted links become alias edges for
-    * [[graft.canon.Canon]]. Returns (surface, entType, candidate, score).
+  /** (surface, entType, token) context rows: every seg token (≥ 2 chars)
+    * of each sentence paired with each ensemble_strong mention in it.
     */
   def mentionTokens(arts: Dataset[SentenceArtifacts])(
       implicit spark: SparkSession): DataFrame = {
@@ -155,16 +155,11 @@ object Link {
     }.toDF("surface", "entType", "token")
   }
 
-  def linkTable(
-      arts: Dataset[SentenceArtifacts],
-      trieB: Broadcast[Trie],
-      typeOfTag: Map[String, String],
-      minScore: Double = 0.3
-  )(implicit spark: SparkSession): DataFrame =
-    linkTableFromTokens(mentionTokens(arts), trieB, typeOfTag, minScore)
-
-  /** Same, but from a (surface, entType, token) table — the snapshot-stage
-    * entry point used by the resumable runner.
+  /** Full linking pass from a (surface, entType, token) table — the
+    * snapshot-stage entry point used by the resumable runner: distinct
+    * mention surfaces → candidates → blended score; accepted links become
+    * alias edges for [[graft.canon.Canon]]. Returns (surface, entType,
+    * candidate, score).
     */
   def linkTableFromTokens(
       mentionTokens: DataFrame,
@@ -199,9 +194,7 @@ object Link {
   def aliasEdges(links: DataFrame): DataFrame = {
     links
       .select(
-        xxhash64(concat_ws("|", col("surface"), col("entType")))
-          .bitwiseAND(lit(Long.MaxValue)).as("src"),
-        xxhash64(concat_ws("|", col("candidate"), col("entType")))
-          .bitwiseAND(lit(Long.MaxValue)).as("dst"))
+        Canon.vertexId(col("surface"), col("entType")).as("src"),
+        Canon.vertexId(col("candidate"), col("entType")).as("dst"))
   }
 }

@@ -6,7 +6,7 @@ import graft.model.{EntityRow, Ontology}
   * post-processing block of EnsemblePredict_all.py:500-552.
   *
   * For every model sequence (the 4 scorers + ensemble_strong), mentions are
-  * re-derived with [[Bio.getPositions]], the per-char probs inside the span
+  * re-derived with [[BioRaw.getPositions]], the per-char probs inside the span
   * are averaged, and the average is scaled by the model's evaluation metrics:
   *
   *   single model (:526-529):  prob_k = mean × eval(ds)(model)(type)(k)
@@ -58,19 +58,6 @@ object Confidence {
     * @param dsEval   eval metrics for this dataset: model → type → [4]
     * @param spanModels for ensemble sequences: (start,end) → voting models
     */
-  def entityRows(
-      ind: Long,
-      modelKey: String,
-      tagged: Seq[(String, Double)],
-      sentence: String,
-      dsEval: Map[String, Map[String, Array[Double]]],
-      numModels: Int,
-      spanModels: Map[(Int, Int), Seq[String]] = Map.empty
-  ): Seq[EntityRow] =
-    entityRowsRaw(ind, modelKey, Tagged.fromPairs(tagged), sentence, dsEval,
-      numModels, spanModels)
-
-  /** Hot-path form over [[Tagged]]. */
   def entityRowsRaw(
       ind: Long,
       modelKey: String,

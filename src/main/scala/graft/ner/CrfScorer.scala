@@ -30,8 +30,8 @@ import graft.util.Hashing
   * function of (model, sentence) — no RNG, no wall-clock.
   *
   * Performance: this IS the 100 TB hot loop (it runs once per model per
-  * sentence), so the inner loops are allocation-free — the BIO transition
-  * matrix is precomputed once per JVM, feature hashing is numeric
+  * sentence), so the inner loops are allocation-free — transitions are
+  * inlined in [[CrfScorer.viterbiActive]], feature hashing is numeric
   * (splitmix64), and the per-sentence scratch arrays are flat.
   */
 final class CrfScorer(
@@ -77,10 +77,9 @@ final class CrfScorer(
     (evScratchB, evScratchI)
   }
 
-  /** Per-char (BIO label, prob) for one sentence — compat wrapper. */
-  def predict(sentence: String): Array[(String, Double)] =
-    predictRaw(sentence).toPairs
-
+  /** Per-char labels + probs for one sentence, scanning the dictionary for
+    * this scorer alone.
+    */
   def predictRaw(sentence: String): Tagged =
     predictRaw(sentence, CrfScorer.dictScan(trie, sentence))
 
@@ -92,8 +91,8 @@ final class CrfScorer(
     * the Viterbi runs over {O} ∪ {B-t, I-t : t evidenced in this sentence}
     * only. Output-identical to the full 21-label lattice, ~5x cheaper on
     * typical sentences (1-3 evidenced types).
-    */
-  /** @param matches shared per-sentence dict scan ([[CrfScorer.dictScan]]) —
+    *
+    * @param matches shared per-sentence dict scan ([[CrfScorer.dictScan]]) —
     * the 4 scorers consume the SAME maximal matches and differ only in their
     * per-(model, occurrence) dropout/jitter rolls, so the scan runs once per
     * sentence instead of once per model.
@@ -242,7 +241,6 @@ object CrfScorer {
   val Types: IndexedSeq[String] = Ontology.essential.keys.toIndexedSeq.sorted
   val Labels: IndexedSeq[String] =
     "O" +: Types.flatMap(t => Seq(s"B-$t", s"I-$t"))
-  val NumLabels: Int = Labels.length
   private val labelIdx: Map[String, Int] = Labels.zipWithIndex.toMap
   def labelIndex(l: String): Int = labelIdx(l)
 
@@ -286,46 +284,10 @@ object CrfScorer {
     if (d <= 0) 0.0 else 1.0 / (1.0 + 10.0 / (d * d))
   }
 
-  /** Precomputed transition matrix [from][to]; I-T only after B-T/I-T. */
-  private val Trans: Array[Array[Double]] = {
-    val m = Array.ofDim[Double](NumLabels, NumLabels)
-    var from = 0
-    while (from < NumLabels) {
-      val fromL = Labels(from)
-      var to = 0
-      while (to < NumLabels) {
-        val toL = Labels(to)
-        m(from)(to) =
-          if (toL.startsWith("I-")) {
-            val t = toL.substring(2)
-            if ((fromL.startsWith("B-") || fromL.startsWith("I-")) &&
-              fromL.substring(2) == t) 0.2
-            else NegInf
-          } else 0.0
-        to += 1
-      }
-      from += 1
-    }
-    m
-  }
-  private val StartBlocked: Array[Boolean] =
-    Labels.map(_.startsWith("I-")).toArray
-
   /** Viterbi over an active-label sublattice; transitions: I-t reachable only
-    * from B-t/I-t of the same type (+0.2), everything else 0.
-    */
-  def viterbiActive(
-      emit: Array[Double],
-      n: Int,
-      nA: Int,
-      typeOfLocal: Array[Int],
-      isILocal: Array[Boolean]
-  ): Array[Int] =
-    viterbiActive(emit, n, nA, typeOfLocal, isILocal,
-      new Array[Double](n * nA), new Array[Int](n * nA), new Array[Int](n))
-
-  /** Buffer-reusing form: dp/bp sized ≥ n×nA, path ≥ n; every used cell is
-    * overwritten (bp row 0 is never read), so dirty buffers are fine.
+    * from B-t/I-t of the same type (+0.2), everything else 0. dp/bp sized
+    * ≥ n×nA, path ≥ n; every used cell is overwritten (bp row 0 is never
+    * read), so dirty buffers are fine.
     */
   def viterbiActive(
       emit: Array[Double],
@@ -388,53 +350,6 @@ object CrfScorer {
     path(n - 1) = bl
     i = n - 1
     while (i > 0) { path(i - 1) = bp(i * nA + path(i)); i -= 1 }
-    path
-  }
-
-  /** emit is a flat n×NumLabels array. */
-  def viterbi(emit: Array[Double], n: Int): Array[Int] = {
-    val dp = Array.ofDim[Double](n * NumLabels)
-    val bp = Array.ofDim[Int](n * NumLabels)
-    var l = 0
-    while (l < NumLabels) {
-      dp(l) = if (StartBlocked(l)) NegInf else emit(l)
-      l += 1
-    }
-    var i = 1
-    while (i < n) {
-      val prevBase = (i - 1) * NumLabels
-      val base = i * NumLabels
-      var to = 0
-      while (to < NumLabels) {
-        var best = NegInf
-        var bestFrom = 0
-        var from = 0
-        while (from < NumLabels) {
-          val tr = Trans(from)(to)
-          if (tr != NegInf) {
-            val s = dp(prevBase + from) + tr
-            if (s > best) { best = s; bestFrom = from }
-          }
-          from += 1
-        }
-        dp(base + to) = best + emit(base + to)
-        bp(base + to) = bestFrom
-        to += 1
-      }
-      i += 1
-    }
-    val path = new Array[Int](n)
-    var bl = 0
-    var bs = NegInf
-    val lastBase = (n - 1) * NumLabels
-    l = 0
-    while (l < NumLabels) {
-      if (dp(lastBase + l) > bs) { bs = dp(lastBase + l); bl = l }
-      l += 1
-    }
-    path(n - 1) = bl
-    i = n - 1
-    while (i > 0) { path(i - 1) = bp(i * NumLabels + path(i)); i -= 1 }
     path
   }
 

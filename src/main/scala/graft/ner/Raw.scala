@@ -11,8 +11,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 final case class Tagged(labels: Array[Int], probs: Array[Double]) {
   def length: Int = labels.length
-  def toPairs: Array[(String, Double)] =
-    Array.tabulate(labels.length)(i => (CrfScorer.Labels(labels(i)), probs(i)))
 }
 
 object Tagged {
@@ -20,27 +18,27 @@ object Tagged {
   def isB(label: Int): Boolean = (label & 1) == 1
   def bOf(typeIdx: Int): Int = 1 + 2 * typeIdx
   def iOf(typeIdx: Int): Int = 2 + 2 * typeIdx
-
-  def fromPairs(pairs: Seq[(String, Double)]): Tagged = {
-    val n = pairs.length
-    val l = new Array[Int](n)
-    val p = new Array[Double](n)
-    var i = 0
-    pairs.foreach { case (lab, pr) =>
-      l(i) = CrfScorer.labelIndex(lab); p(i) = pr; i += 1
-    }
-    Tagged(l, p)
-  }
 }
 
-/** Int-label ports of the Bio state machines (same quirks as [[Bio]], pinned
-  * by delegating tests).
+/** BIO span decoding (reference P8) on int labels. The reference copies its
+  * BIO helpers into four files (multi_ner_prediction.py:47-61, 174-185,
+  * 220-280; EnsemblePredict_all.py:98-222; app_multi.py:45-139); here they
+  * live once. The `post_processing` retag (type sequence → BIO) is
+  * [[EnsemblesRaw.typesToBio]].
+  *
+  * All functions are row-local (one sentence per row) — never Spark windows.
   */
 object BioRaw {
 
-  /** getPositions on int labels; returns (typeIdxs, spans). Replicates the
-    * reference waiting-flag semantics including the single-char drop
-    * (see [[Bio.getPositions]]).
+  /** State-machine port of `get_positions` (EnsemblePredict_all.py:162-222,
+    * copies in multi_ner_prediction.py:220-280 and app_multi.py): a BIO
+    * label sequence → (typeIdxs, packed [start, end) spans).
+    *
+    * Deliberately replicated quirk: the reference only marks a span as
+    * closable (`waiting = True`) when an I- tag is seen or when a B- directly
+    * follows a previous span — so an isolated single-character entity
+    * (B- followed by O, or B- at end-of-sequence) is DROPPED. Parity over
+    * "correctness"; the unit tests pin this behavior.
     */
   def getPositions(labels: Array[Int]): (Array[Int], Array[Long]) = {
     val types = new ArrayBuffer[Int]
@@ -77,11 +75,21 @@ object BioRaw {
   def spanEnd(s: Long): Int = (s & 0xffffffffL).toInt
 }
 
-/** Int-label ensemble core — allocation-free per char; see [[Ensembles]] for
-  * the reference semantics mapping (A6–A8).
+/** The three model-ensemble methods (reference A6–A8), ported from
+  * `multi_labeling` (EnsemblePredict_all.py:226-395; identical copies in
+  * multi_ner_prediction.py:437-568 and app_multi.py:170-253), on int labels
+  * and allocation-free per char.
+  *
+  * All row-local: one sentence per call, arrays only — in Spark these run
+  * inside a single narrow `mapPartitions` stage, no shuffle (SURVEY.md §2.5's
+  * key observation: cross-row dependencies exist only at joins on `ind`).
   */
 object EnsemblesRaw {
 
+  /** Mirrors the pred_dict keys the reference adds: ensemble_votes /
+    * ensemble_union / ensemble_strong (+ boundary, models, types for the
+    * strong method).
+    */
   final case class Result(
       votes: Tagged,
       union: Tagged,
@@ -91,7 +99,15 @@ object EnsemblesRaw {
       typeIdxs: Array[Int]
   )
 
-  /** @param weightsIdx model → per-typeIdx vote weight (dense array). */
+  /** @param pred       model code → per-char labels; must contain "a"
+    *                   (the base model, per EnsemblePredict_all.py:252).
+    * @param weightsIdx model → per-typeIdx vote weight (dense array, from
+    *                   [[Ensembles.weightsIdx]]; multi_ner_prediction.py:139-159
+    *                   normalization: per type, weight = strict_precision /
+    *                   Σ strict_precision, so Σ_models weights(m)(t) = 1).
+    * @param modelOrder iteration order over models (the reference iterates a
+    *                   Python dict; we pin kd,a,c,d for determinism).
+    */
   def run(
       pred: Map[String, Tagged],
       weightsIdx: Map[String, Array[Double]],

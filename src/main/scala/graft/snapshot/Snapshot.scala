@@ -2,7 +2,7 @@ package graft.snapshot
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
@@ -137,20 +137,35 @@ object Snapshot {
         df.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
           partitionBy.map(col): _*)
       else df
+    writeCounted(arranged, dir, stage, partitionBy, parent) { w =>
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(dir)
+    }
+  }
+
+  /** The commit sequence every snapshot write shares: count rows per
+    * partition key as an observed metric of the write itself, run `save`
+    * (the final writer call), read the counts (re-reading `dir` if the
+    * metric is missing), then [[commit]] the manifest.
+    */
+  private def writeCounted(
+      df: DataFrame,
+      dir: String,
+      stage: String,
+      partitionBy: Seq[String],
+      parent: String
+  )(save: DataFrameWriter[Row] => Unit): Manifest = {
+    val spark = df.sparkSession
     val obs = org.apache.spark.sql.Observation()
-    val observed = arranged.observe(obs,
+    val observed = df.observe(obs,
       graft.functions.TopKFreq
         .top_k_freq(partitionKey(partitionBy), Int.MaxValue, Int.MaxValue)
         .as("part_counts"))
-    val writer = observed.write.mode(SaveMode.Overwrite).options(localFsConf)
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dir)
+    save(observed.write.mode(SaveMode.Overwrite).options(localFsConf))
     val partCounts: Map[String, Long] =
       org.apache.spark.sql.GraftBridge.observedOrEmpty(obs).get("part_counts")
         .map { case rows: scala.collection.Seq[_] =>
-          rows.map { case r: org.apache.spark.sql.Row =>
-            r.getString(0) -> r.getLong(1)
-          }.toMap
+          rows.map { case r: Row => r.getString(0) -> r.getLong(1) }.toMap
         }
         .getOrElse(recount(spark, dir, partitionBy))
     val counts =
@@ -180,25 +195,14 @@ object Snapshot {
     if (!exists(spark, dir)) {
       val t0 = System.nanoTime()
       val df = compute
-      val obs = org.apache.spark.sql.Observation()
-      val observed = df.observe(obs,
-        graft.functions.TopKFreq
-          .top_k_freq(lit("all"), Int.MaxValue, Int.MaxValue)
-          .as("part_counts"))
       spark.sql(s"DROP TABLE IF EXISTS $table")
-      observed.write.mode(SaveMode.Overwrite)
-        .options(localFsConf)
-        .option("path", dir)
-        .bucketBy(buckets, bucketCol)
-        .sortBy(bucketCol)
-        .format("parquet")
-        .saveAsTable(table)
-      val rows = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs).get("part_counts") match {
-        case Some(rs: scala.collection.Seq[_]) =>
-          rs.map { case r: org.apache.spark.sql.Row => r.getLong(1) }.sum
-        case _ => spark.read.parquet(dir).count()
+      writeCounted(df, dir, name, Nil, parent) { w =>
+        w.option("path", dir)
+          .bucketBy(buckets, bucketCol)
+          .sortBy(bucketCol)
+          .format("parquet")
+          .saveAsTable(table)
       }
-      commit(spark, dir, Manifest(name, rows, Map("all" -> rows), parent))
       System.err.println(
         f"[snapshot] bucketed stage $name committed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }

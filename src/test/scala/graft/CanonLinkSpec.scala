@@ -16,9 +16,19 @@ class CanonSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  def cachedEntries: Int = org.apache.spark.sql.CacheEntries.count(spark)
+
   test("chain collapses to min label") {
-    val m = cc(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)))
+    val before = cachedEntries
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
+    val m = cc(chain)
     assert((1L to 5L).forall(v => m(v) == 1L))
+    // every frame the CC persists is released before it returns, also
+    // when no round runs
+    assert(cachedEntries == before)
+    import spark.implicits._
+    Canon.connectedComponents(chain.toDF("src", "dst"), maxIter = 0).collect()
+    assert(cachedEntries == before)
   }
 
   test("disjoint components stay disjoint with min labels") {
@@ -156,6 +166,12 @@ class SnapshotSpec extends AnyFunSuite {
     Snapshot.stageBucketed(spark, s"$root/bucketed", "snapc_bucketed",
       "bucketed", "v", buckets = 2) { Seq(1, 2).toDF("v") }
     spark.sql("DROP TABLE IF EXISTS snapc_bucketed")
+    // the bucketed manifest counts what a re-read finds
+    val m = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(Snapshot.manifestPath(s"$root/bucketed")))
+    val n = spark.read.parquet(s"$root/bucketed").count()
+    assert(n == 2)
+    assert(m.contains(s""""rows":$n,"partitions":{"all":$n}"""), m)
     Seq("plain", "bucketed").foreach { d =>
       assert(Snapshot.exists(spark, s"$root/$d"))
       assert(!java.nio.file.Files.exists(
@@ -289,6 +305,12 @@ class KgRunnerSpec extends AnyFunSuite {
     val byCanon = canon.groupBy("canonId").count()
     assert(byCanon.filter(col("count") > 1).count() > 0,
       "expected at least one multi-surface canonical group")
+    // nodes carries the canon map's (surface, entType, canonId) rows as is
+    val keys = Seq("surface", "entType", "canonId").map(col)
+    val nodeKeys = nodes.select(keys: _*)
+    val canonKeys = canon.select(keys: _*)
+    assert(nodeKeys.count() == canonKeys.count())
+    assert(nodeKeys.exceptAll(canonKeys).isEmpty && canonKeys.exceptAll(nodeKeys).isEmpty)
     // resume: re-run with same dir; edge bytes unchanged
     val before = edges.collect().map(_.toString).sorted.toSeq
     graft.KgRunner.run(spark, out, nPages = 30, par = 4)

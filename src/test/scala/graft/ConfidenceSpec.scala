@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ner.{Confidence, Tagged}
+import graft.ner.Confidence
+import NerLabels.tagged
 
 /** Exact-value checks of the A9 confidence formulas
   * (EnsemblePredict_all.py:526-529 single-model, :549-552 ensemble).
@@ -12,9 +13,6 @@ class ConfidenceSpec extends AnyFunSuite {
     "a" -> Map("DIS" -> Array(0.8, 0.9, 0.7, 0.95)),
     "kd" -> Map("DIS" -> Array(0.6, 0.85, 0.65, 0.9))
   )
-
-  def tagged(labels: Seq[String], probs: Seq[Double]): Tagged =
-    Tagged.fromPairs(labels.zip(probs))
 
   test("single model: prob_k = mean(charProbs) × eval[model][type][k]") {
     // span [1,3): probs 0.4, 0.6 → mean 0.5

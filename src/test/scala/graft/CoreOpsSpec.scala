@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.{Mention, Token}
-import graft.ner.{Bio, Boundary, Spans}
+import graft.ner.{BioRaw, Boundary, CrfScorer, EnsemblesRaw, Spans}
 
 class SpansSpec extends AnyFunSuite {
   test("lengthClean widens end-inclusive spans (generation.py:35-41)") {
@@ -26,44 +26,42 @@ class SpansSpec extends AnyFunSuite {
 }
 
 class BioSpec extends AnyFunSuite {
+  import NerLabels.{ids, names, spans, types}
+
+  /** BioRaw.getPositions read back as (type names, [start, end) pairs). */
+  def positions(tags: Seq[String]): (Seq[String], Seq[(Int, Int)]) = {
+    val (ts, ss) = BioRaw.getPositions(ids(tags))
+    (types(ts), spans(ss))
+  }
+
   test("toBio matches post_processing (multi_ner_prediction.py:174-185)") {
-    assert(Bio.toBio(Seq("O", "DIS", "DIS", "O", "SYM", "DIS")) ==
+    val typeIdxs = Seq("O", "DIS", "DIS", "O", "SYM", "DIS")
+      .map(t => if (t == "O") -1 else CrfScorer.Types.indexOf(t))
+    assert(names(EnsemblesRaw.typesToBio(typeIdxs.toArray)) ==
       Seq("O", "B-DIS", "I-DIS", "O", "B-SYM", "B-DIS"))
   }
 
   test("getPositions round-trips multi-char spans") {
     val tags = Seq("O", "B-DIS", "I-DIS", "I-DIS", "O", "B-SYM", "I-SYM")
-    val tagged = tags.map(t => (t, 0.5))
-    val (types, spans, _) = Bio.getPositions(tagged)
+    val (types, spans) = positions(tags)
     assert(types == Seq("DIS", "SYM"))
     assert(spans == Seq((1, 4), (5, 7)))
   }
 
   test("getPositions DROPS isolated single-char entities (reference waiting-flag quirk)") {
     // B- followed by O mid-sentence never sets waiting → dropped
-    val tagged = Seq(("O", 0.1), ("B-DIS", 0.9), ("O", 0.1), ("O", 0.1))
-      .map { case (t, p) => (t, p) }
-    val (types, spans, _) = Bio.getPositions(tagged)
+    val (types, spans) = positions(Seq("O", "B-DIS", "O", "O"))
     assert(types.isEmpty && spans.isEmpty)
     // but a single-char B- directly AFTER a closed entity survives
     // (the B-branch sets waiting=True only when it also closes a span)
-    val t2 = Seq(("B-DIS", 0.9), ("I-DIS", 0.9), ("B-SYM", 0.8), ("O", 0.1))
-    val (ty2, sp2, _) = Bio.getPositions(t2)
+    val (ty2, sp2) = positions(Seq("B-DIS", "I-DIS", "B-SYM", "O"))
     assert(ty2 == Seq("DIS", "SYM"))
     assert(sp2 == Seq((0, 2), (2, 3)))
   }
 
   test("getPositions closes an I- span at end of sentence with end = len") {
-    val t = Seq(("O", 0.1), ("B-DIS", 0.7), ("I-DIS", 0.8))
-    val (ty, sp, pp) = Bio.getPositions(t)
+    val (ty, sp) = positions(Seq("O", "B-DIS", "I-DIS"))
     assert(ty == Seq("DIS") && sp == Seq((1, 3)))
-    assert(pp == Seq((0.8, 0.7))) // (max, min)
-  }
-
-  test("fromSpans inverse of getPositions on well-formed spans") {
-    val spans = Seq(((1, 4), "DIS"), ((5, 7), "SYM"))
-    assert(Bio.fromSpans(8, spans) ==
-      Seq("O", "B-DIS", "I-DIS", "I-DIS", "O", "B-SYM", "I-SYM", "O"))
   }
 }
 

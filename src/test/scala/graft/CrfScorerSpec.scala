@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dict.Gazetteer
-import graft.ner.{Bio, CrfScorer, Ensembles}
+import graft.ner.{CrfScorer, Ensembles, EnsemblesRaw}
+import NerLabels.names
 
 class CrfScorerSpec extends AnyFunSuite {
 
@@ -16,14 +17,15 @@ class CrfScorerSpec extends AnyFunSuite {
   test("deterministic: same (model, sentence) → same output") {
     val s = "患者高血压伴呼吸困难，服阿司匹林。"
     scorers.foreach { sc =>
-      assert(sc.predict(s).toSeq == sc.predict(s).toSeq)
+      val (a, b) = (sc.predictRaw(s), sc.predictRaw(s))
+      assert(a.labels.toSeq == b.labels.toSeq && a.probs.toSeq == b.probs.toSeq)
     }
   }
 
   test("BIO well-formed: no I- without preceding B-/I- of same type") {
     val s = "高血压呼吸困难阿司匹林心脏胸部X线"
     scorers.foreach { sc =>
-      val tags = sc.predict(s).map(_._1)
+      val tags = names(sc.predictRaw(s).labels)
       tags.zipWithIndex.foreach { case (t, i) =>
         if (t.startsWith("I-")) {
           val prev = tags(i - 1)
@@ -42,9 +44,10 @@ class CrfScorerSpec extends AnyFunSuite {
     var found = 0
     var expected = 0
     sents.foreach { s =>
-      val pred = scorers.map(sc => sc.model -> sc.predict(s)).toMap
-      val r = Ensembles.run(pred, weights)
-      val mentions = r.boundaries.map { case (st, e) => s.substring(st, e) }.toSet
+      val pred = scorers.map(sc => sc.model -> sc.predictRaw(s)).toMap
+      val r = EnsemblesRaw.run(pred, Ensembles.weightsIdx(weights))
+      val mentions = NerLabels.spans(r.boundaries)
+        .map { case (st, e) => s.substring(st, e) }.toSet
       expected += 3
       found += Seq("高血压", "呼吸困难", "阿司匹林")
         .count(w => mentions.exists(_.startsWith(w)))
@@ -56,7 +59,8 @@ class CrfScorerSpec extends AnyFunSuite {
   test("probs are in (0,1) and spans carry higher probs than O chars on average") {
     val s = "高血压者呼吸困难。"
     val sc = scorers.head
-    val out = sc.predict(s)
+    val t = sc.predictRaw(s)
+    val out = names(t.labels).zip(t.probs)
     assert(out.forall { case (_, p) => p >= 0.0 && p < 1.0 })
     val (tagged, oTagged) = out.partition(_._1 != "O")
     if (tagged.nonEmpty && oTagged.nonEmpty) {

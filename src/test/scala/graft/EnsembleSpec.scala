@@ -1,19 +1,28 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ner.Ensembles
+import graft.model.Ontology
+import graft.ner.{Ensembles, EnsemblesRaw, Tagged}
+import NerLabels.{names, spans, tagged, types}
 
 class EnsembleSpec extends AnyFunSuite {
 
   // 4 equal-weight models over a 6-char sentence; weights normalized per type
   // (multi_ner_prediction.py:139-159 ⇒ Σ_models w(m)(t) = 1)
-  val w: Map[String, Map[String, Double]] =
+  val w: Map[String, Array[Double]] = Ensembles.weightsIdx(
     Seq("kd", "a", "c", "d").map { m =>
       m -> Map("DIS" -> 0.25, "SYM" -> 0.25)
-    }.toMap
+    }.toMap)
 
-  def seq(tags: String*): Array[(String, Double)] =
-    tags.map(t => (t, 0.8)).toArray
+  def seq(tags: String*): Tagged = tagged(tags, tags.map(_ => 0.8))
+
+  def run(pred: Map[String, Tagged]): EnsemblesRaw.Result =
+    EnsemblesRaw.run(pred, w)
+
+  /** Voting models of each kept span, by name. */
+  def models(r: EnsemblesRaw.Result, pred: Map[String, Tagged]): Seq[Seq[String]] =
+    r.modelMasks.toSeq.map(
+      EnsemblesRaw.modelNames(_, Ontology.models.filter(pred.contains)))
 
   test("majority (ensemble_strong) keeps spans with >=2 distinct models (EnsemblePredict_all.py:362-366)") {
     val pred = Map(
@@ -22,12 +31,12 @@ class EnsembleSpec extends AnyFunSuite {
       "c" -> seq("O", "O", "O", "O", "O", "O"),
       "d" -> seq("O", "O", "O", "O", "O", "O")
     )
-    val r = Ensembles.run(pred, w)
+    val r = run(pred)
     // DIS span seen by a+kd → kept; SYM span only by kd → dropped
-    assert(r.boundaries == Seq((0, 2)))
-    assert(r.types == Seq("DIS"))
-    assert(r.models == Seq(Seq("a", "kd")))
-    assert(r.strong.map(_._1).toSeq ==
+    assert(spans(r.boundaries) == Seq((0, 2)))
+    assert(types(r.typeIdxs) == Seq("DIS"))
+    assert(models(r, pred) == Seq(Seq("a", "kd")))
+    assert(names(r.strong.labels) ==
       Seq("B-DIS", "I-DIS", "O", "O", "O", "O"))
   }
 
@@ -40,8 +49,8 @@ class EnsembleSpec extends AnyFunSuite {
       "c" -> seq("O", "O"),
       "d" -> seq("O", "O")
     )
-    val r = Ensembles.run(pred, w)
-    assert(r.votes.map(_._1).toSeq == Seq("O", "O"))
+    val r = run(pred)
+    assert(names(r.votes.labels) == Seq("O", "O"))
     // three models agree → 0.75 beats O's 0.25 → accepted
     val pred2 = Map(
       "a" -> seq("B-DIS", "O"),
@@ -49,8 +58,8 @@ class EnsembleSpec extends AnyFunSuite {
       "c" -> seq("B-DIS", "O"),
       "d" -> seq("O", "O")
     )
-    val r2 = Ensembles.run(pred2, w)
-    assert(r2.votes.map(_._1).head == "B-DIS")
+    val r2 = run(pred2)
+    assert(names(r2.votes.labels).head == "B-DIS")
   }
 
   test("union: base model a wins conflicts; others fill O gaps (:289-317)") {
@@ -60,21 +69,21 @@ class EnsembleSpec extends AnyFunSuite {
       "c" -> seq("O", "O", "O", "O"),
       "d" -> seq("O", "O", "O", "O")
     )
-    val r = Ensembles.run(pred, w)
-    assert(r.union.map(_._1).toSeq == Seq("B-DIS", "I-DIS", "B-SYM", "O"))
+    val r = run(pred)
+    assert(names(r.union.labels) == Seq("B-DIS", "I-DIS", "B-SYM", "O"))
   }
 
   test("union probabilities: min for votes path, max when filling union gaps") {
     val pred = Map(
-      "a" -> Array(("B-DIS", 0.9), ("O", 0.2)),
-      "kd" -> Array(("B-DIS", 0.5), ("B-SYM", 0.7)),
-      "c" -> Array(("O", 0.1), ("O", 0.1)),
-      "d" -> Array(("O", 0.1), ("O", 0.1))
+      "a" -> tagged(Seq("B-DIS", "O"), Seq(0.9, 0.2)),
+      "kd" -> tagged(Seq("B-DIS", "B-SYM"), Seq(0.5, 0.7)),
+      "c" -> tagged(Seq("O", "O"), Seq(0.1, 0.1)),
+      "d" -> tagged(Seq("O", "O"), Seq(0.1, 0.1))
     )
-    val r = Ensembles.run(pred, w)
+    val r = run(pred)
     // votes prob = min over non-O models' probs seeded with a's (0.9 min 0.5)
-    assert(r.votes(0)._2 == 0.5)
+    assert(r.votes.probs(0) == 0.5)
     // union char 1 filled by kd with max(0.2, 0.7)
-    assert(r.union(1)._2 == 0.7)
+    assert(r.union.probs(1) == 0.7)
   }
 }

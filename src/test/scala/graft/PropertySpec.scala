@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.dict.Gazetteer
-import graft.ner.{Bio, BioRaw, EnsemblesRaw, Tagged}
+import graft.ner.{BioRaw, EnsemblesRaw}
+import scala.collection.mutable.ArrayBuffer
 
 /** Property tests (SURVEY.md §5.2). */
 class PropertySpec extends AnyFunSuite {
@@ -37,6 +38,79 @@ class PropertySpec extends AnyFunSuite {
         assert(s.substring(t.start, t.end) == t.word)
         pos = t.end
       }
+    }
+  }
+
+  /** String-label reference ports of the reference's BIO helpers, kept here
+    * as the oracle the int-label implementations are checked against.
+    */
+  object Bio {
+
+    /** Port of `post_processing` (multi_ner_prediction.py:174-185): a per-char
+      * plain type sequence ("O"/"DIS"/…) → BIO tags. A char opens a B- tag when
+      * its type differs from the previous char's type.
+      */
+    def toBio(types: Seq[String]): Seq[String] = {
+      var prev = "O"
+      types.map { t =>
+        val tag =
+          if (t == "O") "O"
+          else if (t != prev) s"B-$t"
+          else s"I-$t"
+        prev = t
+        tag
+      }
+    }
+
+    /** Faithful state-machine port of `get_positions`
+      * (EnsemblePredict_all.py:162-222, copies in multi_ner_prediction.py:220-280
+      * and app_multi.py): a (BIO tag, prob) sequence → (types, [start, end)
+      * spans, per-span (max, min) prob pairs). Drops isolated single-char
+      * entities exactly as the reference does.
+      */
+    def getPositions(
+        tagged: Seq[(String, Double)]
+    ): (Seq[String], Seq[(Int, Int)], Seq[(Double, Double)]) = {
+      val types = ArrayBuffer.empty[String]
+      val spans = ArrayBuffer.empty[(Int, Int)]
+      val probPairs = ArrayBuffer.empty[(Double, Double)]
+      val lenSeq = tagged.length - 1
+      var waiting = false
+      var typeWaiting = ""
+      var start = 0
+      var probSeq = ArrayBuffer.empty[Double]
+      def close(end: Int): Unit = {
+        spans += ((start, end))
+        types += typeWaiting
+        probPairs += ((probSeq.max, probSeq.min))
+      }
+      var ie = 0
+      while (ie <= lenSeq) {
+        val (elem, prob) = tagged(ie)
+        val head = elem.split("-")(0)
+        if (head == "I") {
+          if (ie != lenSeq) { probSeq += prob; waiting = true }
+          else { probSeq += prob; close(ie + 1) }
+        } else if (ie == lenSeq && elem == "O") {
+          if (waiting) close(ie)
+        } else if (head == "B") {
+          if (waiting) {
+            close(ie)
+            probSeq = ArrayBuffer(prob)
+            waiting = true
+          } else probSeq = ArrayBuffer(prob)
+          typeWaiting = elem.split("-")(1)
+          start = ie
+        } else if (elem == "O") {
+          if (waiting) {
+            waiting = false
+            close(ie)
+            probSeq = ArrayBuffer(prob)
+          }
+        }
+        ie += 1
+      }
+      (types.toSeq, spans.toSeq, probPairs.toSeq)
     }
   }
 
